@@ -62,16 +62,17 @@ def sample_predicate(key: Column, rate_bp: int) -> Column:
     return (h % SAMPLE_MOD) < rate_bp
 
 
-def _stack_expr(flags: Sequence[tuple[str, Column]]) -> str:
-    """stack() unpivot expression over the per-rule sum slots. rule_ids
-    are spliced as SQL string literals, so embedded single quotes are
-    doubled — a rule_id is user data (reachable verbatim from a
-    --rules-spec JSON file), never expression syntax."""
-    args = ", ".join(
-        "'{}', __k{}".format(rule_id.replace("'", "''"), i)
+def _unpivot(
+    wide: DataFrame, keep: Sequence[str], flags: Sequence[tuple[str, Column]]
+) -> DataFrame:
+    """One (rule_id, k_viol) row per rule from the per-rule sum slots.
+    rule_ids are literal values, never expression syntax — a rule_id is
+    user data (reachable verbatim from a --rules-spec JSON file)."""
+    slots = F.array(*(
+        F.struct(F.lit(rule_id).alias("rule_id"), F.col(f"__k{i}").alias("k_viol"))
         for i, (rule_id, _) in enumerate(flags)
-    )
-    return f"stack({len(flags)}, {args})"
+    ))
+    return wide.select(*keep, F.explode(slots).alias("s")).select(*keep, "s.*")
 
 
 def wilson_upper(k: Column, n: Column, z: float = WILSON_Z) -> Column:
@@ -113,7 +114,7 @@ def sampled_certification(
     Plan shape: the sample predicate sits under the flag projection
     (in-scan filter), every flag folds into ONE global aggregation
     (map-side partial combine, single exchange of one row per
-    partition), and the per-rule unpivot (``stack``) runs on the
+    partition), and the per-rule unpivot (``explode``) runs on the
     single aggregated row. Adding a rule adds one sum slot, not a scan.
     """
     sampled = df.where(sample_predicate(key, rate_bp))
@@ -123,9 +124,7 @@ def sampled_certification(
             F.sum(F.coalesce(flag.cast("int"), F.lit(0))).cast("bigint").alias(f"__k{i}")
         )
     one = sampled.agg(*aggs)
-    per_rule = one.selectExpr(
-        "__n", _stack_expr(flags) + " AS (rule_id, k_viol)"
-    )
+    per_rule = _unpivot(one, ["__n"], flags)
     # n=0 (empty table / sample rate too small to catch any row): rate
     # and bound are undefined (NULL) and the rule is explicitly NOT
     # certified — an empty sample attests nothing, and a NULL certified
@@ -168,7 +167,7 @@ def sampled_certification_by_part(
 
     Same plan spine as the global form: in-scan sample filter, ONE
     map-side-combined aggregation — grouped by the partition key, so
-    state is O(parts × rules) — and the stack unpivot + Wilson math on
+    state is O(parts × rules) — and the explode unpivot + Wilson math on
     the tiny grouped frame. Day keys are near-uniform, so the grouped
     exchange has no skew exposure."""
     sampled = df.where(sample_predicate(key, rate_bp))
@@ -178,9 +177,7 @@ def sampled_certification_by_part(
             F.sum(F.coalesce(flag.cast("int"), F.lit(0))).cast("bigint").alias(f"__k{i}")
         )
     per_part = sampled.groupBy(F.col(part_col).alias("part")).agg(*aggs)
-    per_rule = per_part.selectExpr(
-        "part", "__n", _stack_expr(flags) + " AS (rule_id, k_viol)"
-    )
+    per_rule = _unpivot(per_part, ["part", "__n"], flags)
     return per_rule.select(
         "part",
         "rule_id",

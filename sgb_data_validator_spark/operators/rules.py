@@ -339,7 +339,10 @@ def rules_from_spec(spec: Sequence[dict]) -> "RowRuleSet":
     the data) rather than code — the Spark-side analog of the
     reference's data-driven vocabularies and required-field tables.
     Unknown rule names raise immediately with the known names, so a
-    typo fails at suite load, not mid-job."""
+    typo fails at suite load, not mid-job. So does an empty suite,
+    which would otherwise certify and pass every partition vacuously."""
+    if not spec:
+        raise ValueError("empty rule suite spec: list at least one rule")
     rs = RowRuleSet()
     for entry in spec:
         kwargs = dict(entry)
@@ -509,11 +512,3 @@ class RowRuleSet:
                 "status"
             ),
         )
-
-
-def empty_violations(spark) -> DataFrame:
-    return spark.createDataFrame(
-        [],
-        "rule_id string, conv_id string, turn_idx int, column string, "
-        "offending_value string, severity string, part string",
-    )

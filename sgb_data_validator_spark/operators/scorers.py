@@ -53,11 +53,6 @@ def set_lang_scorer(scorer: Scorer | None) -> None:
     _active["lang"] = scorer
 
 
-def set_quality_scorer(scorer: Scorer | None) -> None:
-    """Install a quality scorer process-wide; ``None`` restores the default."""
-    _active["quality"] = scorer
-
-
 @contextmanager
 def scoped_lang_scorer(scorer: Scorer | None):
     prev = _active["lang"]

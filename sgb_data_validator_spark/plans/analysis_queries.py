@@ -29,6 +29,7 @@ from sgb_data_validator_spark.operators import textanalysis as T
 from sgb_data_validator_spark.operators.packing import token_window_chunks
 from sgb_data_validator_spark.operators.referential import fd_violations
 from sgb_data_validator_spark.operators.sampling import group_topk
+from sgb_data_validator_spark.plans.constants import _t
 
 # token-window chunking: 32-token windows advancing 24 tokens (8-token
 # overlap) — sized so the sf fixtures' ~40-200-token docs emit several
@@ -42,10 +43,6 @@ TOPK_K = 5
 # tf-idf terms kept per document; ln rounding matches corpus_queries
 TFIDF_K = 3
 LN_ROUND = 6
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ------------------------------------------------- token-window chunking

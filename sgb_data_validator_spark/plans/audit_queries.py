@@ -6,8 +6,9 @@ language mismatch, and role co-occurrence PMI.
 Same driver contract as every other plans module: (callable, oracle
 SQL) pairs over the driver testdata, every computed column aliased
 identically on both sides, counts cast bigint, floats rounded 6 dp.
-Transcript-shaped inputs reuse monitor_queries' canonical events→turns
-projection so the twins replay the identical derivation.
+Transcript-shaped inputs reuse the canonical events→turns projection
+(plans/constants.events_turns) so the twins replay the identical
+derivation.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sgb_data_validator_spark.plans.monitor_queries import _SQL_TURNS, _t, _turns
+from sgb_data_validator_spark.plans.constants import _t, events_turns, sql_events_turns
 
 _SQL_H20 = "(('0x' || substr(md5(role), 1, 15))::BIGINT % 1000003)"
 
@@ -36,17 +37,9 @@ def q_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bijection of one it already has), then O(convs)→O(groups) on the
     fingerprint; no turn list is ever collected, so Zipf-hot
     conversations cost nothing extra."""
-    from pyspark.sql import Window
-
     from sgb_data_validator_spark.operators.audit import conv_fingerprints
 
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t = ev.select(
-        "user_id",
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("role"),
-    )
+    t = events_turns(_t(spark, sf_dir, "events"), "user_id")
     fp = conv_fingerprints(t, conv_col="user_id", prefix_len=4).withColumn(
         "conv_id", F.concat(F.lit("u"), F.col("user_id"))
     )
@@ -61,7 +54,7 @@ def q_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_CONV_DEDUP = f"""
-WITH turns AS ({_SQL_TURNS}),
+WITH turns AS ({sql_events_turns()}),
 f AS (
   SELECT conv_id,
          cast(sum(({_SQL_H20} * ((turn_idx % 9973) + 1)) % 999999937) AS BIGINT) AS fp,
@@ -330,11 +323,11 @@ def q_role_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     assistant turn)."""
     from sgb_data_validator_spark.operators.audit import cooccurrence_pmi
 
-    return cooccurrence_pmi(_turns(_t(spark, sf_dir, "events")))
+    return cooccurrence_pmi(events_turns(_t(spark, sf_dir, "events")))
 
 
 SQL_ROLE_PMI = f"""
-WITH turns AS ({_SQL_TURNS}),
+WITH turns AS ({sql_events_turns()}),
 dv AS (SELECT DISTINCT conv_id, role FROM turns),
 per AS (SELECT role, count(*)::BIGINT AS n_one FROM dv GROUP BY 1),
 n AS (SELECT count(DISTINCT conv_id)::BIGINT AS n_convs FROM dv),

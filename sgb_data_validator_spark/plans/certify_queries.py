@@ -8,12 +8,10 @@ counts cast bigint, floats rounded 6 dp, timestamps carried as unix
 microseconds (integer — engine-portable by construction).
 
 Transcript-shaped inputs route through the shared canonical
-events→turns projections — monitor_queries._turns for plain turns
-(q_turn_gaps) and transform_queries.turns_with_tool_dirt for the
-tool-dirt-bearing form (q_cert_sample shares q_transcript_pipeline's
-exact projection, so the certificate bounds the same rows the full
-pipeline validates) — ONE definition of the ordering and the dirt
-mapping per shape, so a change lands in every consumer at once.
+events→turns projection (plans/constants.events_turns and its SQL twin;
+q_cert_sample adds the same text and tool-dirt columns as
+q_transcript_pipeline, so the certificate bounds the same rows the full
+pipeline validates).
 """
 
 from __future__ import annotations
@@ -21,10 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sgb_data_validator_spark.plans.constants import EVENT_TYPES
-from sgb_data_validator_spark.plans.monitor_queries import _SQL_TURNS, _t, _turns
-
-_IN_TYPES = ", ".join(repr(x) for x in EVENT_TYPES)
+from sgb_data_validator_spark.plans.constants import (
+    EVENT_TYPES,
+    SQL_TOOL_DIRT,
+    _IN_TYPES,
+    _t,
+    events_turns,
+    sql_events_turns,
+    tool_dirt,
+)
 
 #: certification parameters — module constants so the Spark plan and
 #: the SQL twin are generated from the same numbers.
@@ -47,13 +50,13 @@ def q_turn_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     output O(gaps)."""
     from sgb_data_validator_spark.operators.certify import gap_intervals
 
-    turns = _turns(_t(spark, sf_dir, "events"))
+    turns = events_turns(_t(spark, sf_dir, "events"))
     cleaned = turns.where(F.col("role") != "purchase")
     return gap_intervals(cleaned, "conv_id", "turn_idx")
 
 
 SQL_TURN_GAPS = f"""
-WITH turns AS ({_SQL_TURNS}),
+WITH turns AS ({sql_events_turns()}),
 cleaned AS (
   SELECT conv_id, turn_idx FROM turns
   WHERE role <> 'purchase' AND turn_idx IS NOT NULL
@@ -123,11 +126,9 @@ def q_cert_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is this delivery obviously bad?" before paying for the full
     validate()."""
     from sgb_data_validator_spark.operators.certify import sampled_certification
-    from sgb_data_validator_spark.plans.transform_queries import (
-        turns_with_tool_dirt,
-    )
 
-    turns = turns_with_tool_dirt(_t(spark, sf_dir, "events"))
+    ev = _t(spark, sf_dir, "events")
+    turns = events_turns(ev, F.col("props").alias("text"), tool_dirt())
     parse_ok = F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
     url_pat = r"(?i)(?:https?://|ftp://|www\.)[^\s]+"
     flags = [
@@ -150,14 +151,7 @@ def q_cert_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_CERT_SAMPLE = f"""
-WITH turns AS (
-  SELECT 'u' || user_id::VARCHAR AS conv_id,
-         cast(row_number() OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST) - 1 AS int) AS turn_idx,
-         event_type AS role, props AS text,
-         CASE WHEN event_type = 'click' THEN 'browser'
-              WHEN user_id % 97 = 0 THEN 'shell' END AS tool
-  FROM events
-),
+WITH turns AS ({sql_events_turns("props AS text", SQL_TOOL_DIRT)}),
 sampled AS (
   SELECT *, (text IS NOT NULL AND trim(text) <> '') AS parse_ok
   FROM turns

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sgb_data_validator_spark.operators import textanalysis as T
+from sgb_data_validator_spark.plans.constants import _t
 
 # trigram doc-frequency above which a gram counts as boilerplate, and
 # the per-doc boilerplate-coverage drop threshold (basis points).
@@ -30,10 +31,6 @@ NLL_ROUND = 6
 
 # HLL relative standard deviation for the sketch-stats variant
 HLL_RSD = 0.05
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,11 +33,8 @@ from sgb_data_validator_spark.operators import rules as R
 from sgb_data_validator_spark.operators.iconclass import iconclass_violations
 from sgb_data_validator_spark.operators.referential import propagate_private_flag
 from sgb_data_validator_spark.operators.stats import column_histogram
+from sgb_data_validator_spark.plans.constants import _t, events_turns, sql_events_turns
 from sgb_data_validator_spark.vocab import ISO_639_1_CODES
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # --------------------------------------------------------- ISO 639-1 (J2)
@@ -513,18 +510,13 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     starts a new session (operators/windows.py:sessionize — chunk-split
     windows + prefix offsets, same skew design as the sequence rules)."""
     from sgb_data_validator_spark.operators.windows import sessionize
-    from sgb_data_validator_spark.plans.extra_queries import _events_as_turns
 
-    return sessionize(_events_as_turns(spark, sf_dir), gap_us=SESSION_GAP_US)
+    turns = events_turns(_t(spark, sf_dir, "events"), "ts")
+    return sessionize(turns, gap_us=SESSION_GAP_US)
 
 
 SQL_SESSIONIZE = f"""
-WITH turns AS (
-  SELECT 'u' || user_id::VARCHAR AS conv_id,
-         cast(row_number() OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST) - 1 AS int) AS turn_idx,
-         ts
-  FROM events
-),
+WITH turns AS ({sql_events_turns("ts")}),
 w AS (
   SELECT conv_id, turn_idx, ts,
          lag(ts) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS pts

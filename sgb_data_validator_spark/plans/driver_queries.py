@@ -36,11 +36,15 @@ from sgb_data_validator_spark.operators.uniqueness import uniqueness_violations
 from sgb_data_validator_spark.plans.constants import (  # noqa: F401  (re-exports)
     EVENT_TYPES,
     LANGS,
+    SQL_DAY_PART,
+    SQL_TOOL_DIRT,
+    _IN_TYPES,
+    _t,
+    day_part,
+    events_turns,
+    sql_events_turns,
+    tool_dirt,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------- row rules
@@ -594,9 +598,9 @@ def q_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_VERDICTS = f"""
 SELECT strftime(ts, '%Y-%m-%d') AS part,
-       cast(sum(CASE WHEN event_type NOT IN ({", ".join(repr(x) for x in EVENT_TYPES)})
+       cast(sum(CASE WHEN event_type NOT IN ({_IN_TYPES})
                      THEN 1 ELSE 0 END) AS bigint) AS error_count,
-       CASE WHEN sum(CASE WHEN event_type NOT IN ({", ".join(repr(x) for x in EVENT_TYPES)})
+       CASE WHEN sum(CASE WHEN event_type NOT IN ({_IN_TYPES})
                           THEN 1 ELSE 0 END) > 0 THEN 'FAILED' ELSE 'PASSED' END AS status
 FROM events GROUP BY 1
 """
@@ -613,32 +617,14 @@ def q_role_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate — see operators/windows.py:role_structure_violations."""
     from sgb_data_validator_spark.operators.windows import role_structure_violations
 
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    turns = ev.select(
-        F.concat(F.lit("u"), F.col("user_id")).alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("role"),
-        F.when(F.col("event_type") == "click", F.lit("browser"))
-        .when(F.col("user_id") % 97 == 0, F.lit("shell"))
-        .alias("tool"),
-        F.date_format("ts", "yyyy-MM-dd").alias("part"),
-    )
+    turns = events_turns(_t(spark, sf_dir, "events"), tool_dirt(), day_part())
     return role_structure_violations(
         turns, opening_roles=("view", "click"), tool_roles=("click",)
     )
 
 
-SQL_ROLE_STRUCTURE = """
-WITH turns AS (
-  SELECT 'u' || user_id::VARCHAR AS conv_id,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST) - 1 AS turn_idx,
-         event_type AS role,
-         CASE WHEN event_type = 'click' THEN 'browser'
-              WHEN user_id % 97 = 0 THEN 'shell' END AS tool,
-         strftime(ts, '%Y-%m-%d') AS part
-  FROM events
-),
+SQL_ROLE_STRUCTURE = f"""
+WITH turns AS ({sql_events_turns(SQL_TOOL_DIRT, SQL_DAY_PART)}),
 first_turn AS (SELECT conv_id, min(turn_idx) AS turn_idx FROM turns GROUP BY 1)
 SELECT 'conv.opening_role' AS rule_id, t.conv_id,
        cast(t.turn_idx AS int) AS turn_idx, 'role' AS "column",

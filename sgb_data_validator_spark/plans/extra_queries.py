@@ -18,6 +18,15 @@ from pyspark.sql import functions as F
 
 from sgb_data_validator_spark.operators import rules as R
 from sgb_data_validator_spark.operators import similarity as S
+from sgb_data_validator_spark.plans.constants import (
+    EVENT_TYPES,
+    SQL_DAY_PART,
+    _IN_TYPES,
+    _t,
+    day_part,
+    events_turns,
+    sql_events_turns,
+)
 from sgb_data_validator_spark.plans.training_queries import (
     DIM,
     KNN_QUERY_MOD,
@@ -26,31 +35,13 @@ from sgb_data_validator_spark.plans.training_queries import (
     SQL_VECTORS_TWINS,
 )
 
-# no import from plans.driver_queries here: that module imports this one
-# at its bottom to build the registry, so a top-level back-import would
-# be circular whenever this module is imported first
-EVENT_TYPES = ["click", "view", "purchase", "signup"]
-
 CENT_MOD = 40  # every 40th corpus vector is an IVF centroid
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-_IN_TYPES = ", ".join(repr(x) for x in EVENT_TYPES)
-
-# The transcript projection of events shared with
-# transform_queries.q_transcript_pipeline (same shape, reused here so the
-# streaming/diff oracles stay self-contained).
-_SQL_TURNS = """
-turns AS (
-  SELECT 'u' || user_id::VARCHAR AS conv_id,
-         cast(row_number() OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST) - 1 AS int) AS turn_idx,
-         event_type AS role, props AS text,
-         CASE WHEN event_type = 'click' THEN 'browser' END AS tool,
-         ts, strftime(ts, '%Y-%m-%d') AS part
-  FROM events
-),
+# The transcript projection of events (tool = 'browser' on click turns)
+# plus the row rules' parse_ok flag, as two CTEs for the SQL twins.
+_SQL_BROWSER_TOOL = "CASE WHEN event_type = 'click' THEN 'browser' END AS tool"
+_SQL_TURNS_BASE = f"""
+turns AS ({sql_events_turns("props AS text", _SQL_BROWSER_TOOL, "ts", SQL_DAY_PART)}),
 base AS (SELECT *, (text IS NOT NULL AND trim(text) <> '') AS parse_ok FROM turns)
 """
 
@@ -77,16 +68,15 @@ FROM base WHERE parse_ok AND text IS NOT NULL
 
 
 def _events_as_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        F.concat(F.lit("u"), F.col("user_id")).alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("role"),
+    """plans/constants.events_turns with text, a 'browser' tool on click
+    turns, ts and part — the Spark side of ``_SQL_TURNS_BASE``."""
+    return events_turns(
+        _t(spark, sf_dir, "events"),
         F.col("props").alias("text"),
         F.when(F.col("event_type") == "click", F.lit("browser")).alias("tool"),
         "ts",
-    ).withColumn("part", F.date_format("ts", "yyyy-MM-dd"))
+        day_part(),
+    )
 
 
 def _transcript_rules() -> R.RowRuleSet:
@@ -136,7 +126,7 @@ def q_streaming_row_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_STREAMING_ROW_RULES = f"""
-WITH {_SQL_TURNS},
+WITH {_SQL_TURNS_BASE},
 v AS ({_SQL_RR_NOT_NULL} UNION ALL {_SQL_RR_NON_EMPTY}
       UNION ALL {_SQL_RR_VOCAB} UNION ALL {_SQL_RR_URL})
 SELECT rule_id, cast(count(*) AS bigint) AS n FROM v GROUP BY rule_id
@@ -181,7 +171,7 @@ def q_streaming_stateful_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_STREAMING_STATEFUL_SEQ = f"""
-WITH {_SQL_TURNS},
+WITH {_SQL_TURNS_BASE},
 d AS (
   SELECT conv_id, turn_idx,
          CASE WHEN turn_idx % 7 = 3 THEN ts - INTERVAL 2 DAY ELSE ts END AS ts
@@ -242,7 +232,7 @@ def q_streaming_windowed_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 SQL_STREAMING_WINDOWED_VERDICTS = f"""
-WITH {_SQL_TURNS},
+WITH {_SQL_TURNS_BASE},
 flags AS (
   SELECT part,
          (text IS NULL
@@ -337,7 +327,7 @@ def q_run_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_RUN_DIFF = f"""
-WITH {_SQL_TURNS},
+WITH {_SQL_TURNS_BASE},
 va AS ({_SQL_RR_NOT_NULL} UNION ALL {_SQL_RR_NON_EMPTY}
        UNION ALL {_SQL_RR_VOCAB} UNION ALL {_SQL_RR_URL}),
 vb AS ({_SQL_RR_NOT_NULL} UNION ALL {_SQL_RR_NON_EMPTY} UNION ALL {_SQL_RR_URL})

@@ -6,9 +6,10 @@ Same driver contract as every other plans module: each query is a
 (callable, oracle-SQL) pair over the driver testdata tables, every
 computed column aliased identically on both sides, counts cast bigint,
 floats rounded 4-6 dp (see plans/driver_queries.py's conventions
-docstring). Transcript-shaped inputs are projected from `events` the
-same deterministic way q_role_structure does (row_number per user), so
-these queries prove the operators without synthesizing external data.
+docstring). Transcript-shaped inputs are projected from `events` by
+the shared plans/constants.events_turns (row_number per user) and its
+SQL twin, so these queries prove the operators without synthesizing
+external data.
 """
 
 from __future__ import annotations
@@ -16,81 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _turns(
-    ev: DataFrame,
-    with_part: bool = False,
-    text_col: str | None = None,
-    with_tool: bool = False,
-) -> DataFrame:
-    """The canonical events→transcript projection (matches
-    q_role_structure / SQL_ROLE_STRUCTURE): conv per user, dense
-    turn_idx by (ts, event_id), role = event_type; ``with_part`` adds
-    the day-partition column, ``text_col`` carries an events column
-    through as the transcript's ``text``, ``with_tool`` derives the
-    canonical ``tool`` column (a 'view' turn with value > 250 invokes
-    tool 'chk'; every other turn carries NULL — the deterministic
-    caller mapping the pairing rule tests against). ONE definition —
-    every query and twin that derives turns from events must route
-    through this family so a change to the canonical ordering lands
-    everywhere at once."""
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").asc_nulls_first(), F.col("event_id").asc_nulls_first()
-    )
-    cols = [
-        F.concat(F.lit("u"), F.col("user_id")).alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("role"),
-    ]
-    if text_col:
-        cols.append(F.col(text_col).alias("text"))
-    if with_tool:
-        cols.append(
-            F.when(
-                (F.col("event_type") == "view") & (F.col("value") > 250.0),
-                F.lit("chk"),
-            ).alias("tool")
-        )
-    if with_part:
-        cols.append(F.date_format("ts", "yyyy-MM-dd").alias("part"))
-    return ev.select(*cols)
-
-
-def _sql_turns(
-    with_part: bool = False,
-    text_col: str | None = None,
-    with_tool: bool = False,
-) -> str:
-    """SQL twin generator of :func:`_turns` — ONE template so a change
-    to the canonical ordering lands in every twin at once. NULLS FIRST
-    is pinned explicitly: Spark's window default is nulls-first while
-    DuckDB's is nulls-last, so an unpinned ORDER BY would renumber a
-    NULL-ts turn differently across engines."""
-    cols = [
-        "'u' || user_id::VARCHAR AS conv_id",
-        "cast(row_number() OVER (PARTITION BY user_id"
-        " ORDER BY ts NULLS FIRST, event_id NULLS FIRST) - 1 AS int) AS turn_idx",
-        "event_type AS role",
-    ]
-    if text_col:
-        cols.append(f"{text_col} AS text")
-    if with_tool:
-        cols.append(
-            "CASE WHEN event_type = 'view' AND value > 250 THEN 'chk' END AS tool"
-        )
-    if with_part:
-        cols.append("strftime(ts, '%Y-%m-%d') AS part")
-    sel = ",\n         ".join(cols)
-    return f"\n  SELECT {sel}\n  FROM events\n"
-
-
-_SQL_TURNS = _sql_turns()
-_SQL_TURNS_P = _sql_turns(with_part=True)
-_SQL_TURNS_P_TEXT = _sql_turns(with_part=True, text_col="props")
+from sgb_data_validator_spark.plans.constants import (
+    EVENT_TYPES,
+    _IN_TYPES,
+    _t,
+    events_turns,
+    sql_events_turns,
+)
 
 
 # ------------------------------------------------------------- drift: W1
@@ -160,7 +93,6 @@ def q_violation_pchart(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(day) over the fact, pooled rate as an in-plan window over
     the O(days) frame."""
     from sgb_data_validator_spark.operators.stats import rate_pchart
-    from sgb_data_validator_spark.plans.constants import EVENT_TYPES
 
     ev = _t(spark, sf_dir, "events")
     flag = ~F.col("event_type").isin(*EVENT_TYPES)
@@ -180,15 +112,11 @@ def q_violation_pchart(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_violation_pchart() -> str:
-    from sgb_data_validator_spark.plans.constants import EVENT_TYPES
-
-    vocab = ", ".join(repr(x) for x in EVENT_TYPES)
-    return f"""
+SQL_VIOLATION_PCHART = f"""
 WITH per AS (
   SELECT strftime(ts, '%Y-%m-%d') AS part,
          cast(count(*) AS bigint) AS n,
-         cast(sum(CASE WHEN event_type NOT IN ({vocab}) THEN 1 ELSE 0 END) AS bigint) AS defects
+         cast(sum(CASE WHEN event_type NOT IN ({_IN_TYPES}) THEN 1 ELSE 0 END) AS bigint) AS defects
   FROM events GROUP BY 1
 ), pooled AS (
   SELECT part, n, defects,
@@ -211,8 +139,6 @@ FROM scored
 """
 
 
-SQL_VIOLATION_PCHART = _sql_violation_pchart()
-
 
 # ----------------------------------------------------- role transitions
 
@@ -225,7 +151,7 @@ def q_role_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     then one map-side-combined groupBy to O(roles²) rows."""
     from sgb_data_validator_spark.operators.windows import role_transitions
 
-    turns = _turns(_t(spark, sf_dir, "events"))
+    turns = events_turns(_t(spark, sf_dir, "events"))
     return role_transitions(turns).select(
         "prev_role",
         "role",
@@ -235,7 +161,7 @@ def q_role_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_ROLE_TRANSITIONS = f"""
-WITH turns AS ({_SQL_TURNS}),
+WITH turns AS ({sql_events_turns()}),
 pairs AS (
   SELECT a.role AS prev_role, b.role AS role
   FROM turns a JOIN turns b
@@ -261,7 +187,7 @@ def q_conv_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     actionable anomaly set, not a full per-conv dump)."""
     from sgb_data_validator_spark.operators.windows import transition_surprise
 
-    turns = _turns(_t(spark, sf_dir, "events"))
+    turns = events_turns(_t(spark, sf_dir, "events"))
     scored = transition_surprise(turns)
     stats = Window.partitionBy()
     return (
@@ -277,7 +203,7 @@ def q_conv_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_CONV_SURPRISE = f"""
-WITH turns AS ({_SQL_TURNS}),
+WITH turns AS ({sql_events_turns()}),
 pairs AS (
   SELECT a.conv_id, a.role AS prev_role, b.role AS role
   FROM turns a JOIN turns b
@@ -349,7 +275,6 @@ def q_violation_uchart(spark: SparkSession, sf_dir: str) -> DataFrame:
     value per day over the day's row count — two rules, so a row can
     carry up to two defects, exactly the shape that needs u not p."""
     from sgb_data_validator_spark.operators.stats import uchart_from_counts
-    from sgb_data_validator_spark.plans.constants import EVENT_TYPES
 
     ev = _t(spark, sf_dir, "events")
     vocab_bad = (~F.col("event_type").isin(*EVENT_TYPES)).cast("int")
@@ -373,15 +298,11 @@ def q_violation_uchart(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_violation_uchart() -> str:
-    from sgb_data_validator_spark.plans.constants import EVENT_TYPES
-
-    vocab = ", ".join(repr(x) for x in EVENT_TYPES)
-    return f"""
+SQL_VIOLATION_UCHART = f"""
 WITH per AS (
   SELECT strftime(ts, '%Y-%m-%d') AS part,
          cast(count(*) AS bigint) AS n,
-         cast(sum((CASE WHEN event_type NOT IN ({vocab}) THEN 1 ELSE 0 END)
+         cast(sum((CASE WHEN event_type NOT IN ({_IN_TYPES}) THEN 1 ELSE 0 END)
                 + (CASE WHEN value < 0 THEN 1 ELSE 0 END)) AS bigint) AS defects
   FROM events GROUP BY 1
 ), pooled AS (
@@ -403,8 +324,6 @@ SELECT part, n, defects,
 FROM scored
 """
 
-
-SQL_VIOLATION_UCHART = _sql_violation_uchart()
 
 
 def q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -497,7 +416,6 @@ def q_cusum_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over the O(days) frame, replayed bit-for-bit by the SQL
     twin (closed prefix-scan form, no recursion)."""
     from sgb_data_validator_spark.operators.stats import cusum_from_counts
-    from sgb_data_validator_spark.plans.constants import EVENT_TYPES
 
     ev = _t(spark, sf_dir, "events")
     flag = ~F.col("event_type").isin(*EVENT_TYPES)
@@ -516,15 +434,11 @@ def q_cusum_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_cusum_shift() -> str:
-    from sgb_data_validator_spark.plans.constants import EVENT_TYPES
-
-    vocab = ", ".join(repr(x) for x in EVENT_TYPES)
-    return f"""
+SQL_CUSUM_SHIFT = f"""
 WITH per AS (
   SELECT strftime(ts, '%Y-%m-%d') AS part,
          cast(count(*) AS bigint) AS n,
-         cast(sum(CASE WHEN event_type NOT IN ({vocab}) THEN 1 ELSE 0 END) AS bigint) AS defects
+         cast(sum(CASE WHEN event_type NOT IN ({_IN_TYPES}) THEN 1 ELSE 0 END) AS bigint) AS defects
   FROM events GROUP BY 1
 ), pooled AS (
   SELECT part, n, defects,
@@ -552,8 +466,6 @@ FROM scanned
 """
 
 
-SQL_CUSUM_SHIFT = _sql_cusum_shift()
-
 
 # ------------------------------------------------- response latency
 
@@ -569,13 +481,7 @@ def q_latency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (portable) divided once into double seconds. Exact percentiles so
     DuckDB mirrors bit-for-bit; the 10^12-row path swaps in
     percentile_approx exactly as q_quantiles documents."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    turns = ev.select(
-        F.col("user_id").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        "ts",
-    )
+    turns = events_turns(_t(spark, sf_dir, "events"), "ts")
     nxt = turns.select(
         "conv_id",
         (F.col("turn_idx") - 1).alias("turn_idx"),
@@ -599,13 +505,8 @@ def q_latency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_LATENCY_PROFILE = """
-WITH turns AS (
-  SELECT user_id AS conv_id,
-         cast(row_number() OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST) - 1 AS int) AS turn_idx,
-         ts
-  FROM events
-), gaps AS (
+SQL_LATENCY_PROFILE = f"""
+WITH turns AS ({sql_events_turns("ts")}), gaps AS (
   SELECT strftime(b.ts, '%Y-%m-%d') AS part,
          date_diff('us', a.ts, b.ts) / 1000000.0 AS gap_s
   FROM turns a JOIN turns b
@@ -703,7 +604,6 @@ def q_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the O(days) frame in closed rescaled-scan form, replayed
     bit-for-bit by the SQL twin."""
     from sgb_data_validator_spark.operators.stats import ewma_from_counts
-    from sgb_data_validator_spark.plans.constants import EVENT_TYPES
 
     ev = _t(spark, sf_dir, "events")
     flag = ~F.col("event_type").isin(*EVENT_TYPES)
@@ -722,17 +622,13 @@ def q_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_ewma_chart() -> str:
-    from sgb_data_validator_spark.plans.constants import EVENT_TYPES
-
-    vocab = ", ".join(repr(x) for x in EVENT_TYPES)
-    # λ=0.25 ⇒ 1−λ=0.75 and (1−λ)²=0.5625: exact binary fractions, so
-    # power() agrees bit-for-bit across engines for the chart's horizon
-    return f"""
+# λ=0.25 ⇒ 1−λ=0.75 and (1−λ)²=0.5625: exact binary fractions, so
+# power() agrees bit-for-bit across engines for the chart's horizon
+SQL_EWMA_CHART = f"""
 WITH per AS (
   SELECT strftime(ts, '%Y-%m-%d') AS part,
          cast(count(*) AS bigint) AS n,
-         cast(sum(CASE WHEN event_type NOT IN ({vocab}) THEN 1 ELSE 0 END) AS bigint) AS defects
+         cast(sum(CASE WHEN event_type NOT IN ({_IN_TYPES}) THEN 1 ELSE 0 END) AS bigint) AS defects
   FROM events GROUP BY 1
 ), pooled AS (
   SELECT part, n, defects,
@@ -759,8 +655,6 @@ SELECT part, n, defects, round(z, 4) AS z,
 FROM scanned
 """
 
-
-SQL_EWMA_CHART = _sql_ewma_chart()
 
 
 MONITOR_QUERIES: dict[str, tuple] = {

@@ -15,10 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sgb_data_validator_spark.operators.temporal import as_of_join, epoch_us, range_join
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from sgb_data_validator_spark.plans.constants import _t
 
 
 # ----------------------------------------------------------- as-of join

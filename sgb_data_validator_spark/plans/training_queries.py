@@ -17,6 +17,7 @@ from sgb_data_validator_spark.operators import dedup as D
 from sgb_data_validator_spark.operators import multimodal as M
 from sgb_data_validator_spark.operators import similarity as S
 from sgb_data_validator_spark.operators import textanalysis as T
+from sgb_data_validator_spark.plans.constants import _t
 
 # MinHash runs on word-BIGRAM shingles (sequence-sensitive): this
 # corpus's random-pair word-SET Jaccard is already ~0.6 (40-word
@@ -33,10 +34,6 @@ DIM = 64
 TWIN_MOD = 25       # every 25th embedding gets an injected scaled twin
 TWIN_OFFSET = 1_000_000
 KNN_QUERY_MOD = 50  # every 50th vector is a query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---- shared SQL fragments ------------------------------------------------

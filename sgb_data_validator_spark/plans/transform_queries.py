@@ -14,10 +14,21 @@ the pure-Python oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sgb_data_validator_spark.functions import native
+from sgb_data_validator_spark.plans.constants import (
+    EVENT_TYPES,
+    SQL_DAY_PART,
+    SQL_TOOL_DIRT,
+    _IN_TYPES,
+    _t,
+    day_part,
+    events_turns,
+    sql_events_turns,
+    tool_dirt,
+)
 
 # ---- text transform pipeline --------------------------------------------
 
@@ -37,7 +48,7 @@ def _dirty_text() -> F.Column:
 
 
 def q_text_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _t(spark, sf_dir, "documents")
     dirty = _dirty_text()
     out = native.normalize_whitespace(dirty)
     out = native.normalize_wikidata_url(out)
@@ -86,30 +97,7 @@ FROM ws
 
 # ---- full transcript pipeline (flagship with oracle) ----------------------
 
-EVENT_TYPES = ["click", "view", "purchase", "signup"]
 GHOST_CONV = "u_ghost"
-
-
-def turns_with_tool_dirt(ev: DataFrame) -> DataFrame:
-    """The canonical events→transcript projection WITH the portable
-    tool-dirt mapping — ONE definition shared by q_transcript_pipeline
-    and certify_queries.q_cert_sample (and mirrored verbatim by their
-    SQL twins): conv per user, dense turn_idx by (ts, event_id), role =
-    event_type, text = props, tool = 'browser' on click turns / stray
-    'shell' on every 97th user's non-click turns (fires BOTH ref.tool
-    and tool.role_consistency), part = day of ts. A change to the
-    ordering or the dirt mapping lands in every consumer at once."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        F.concat(F.lit("u"), F.col("user_id")).alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("role"),
-        F.col("props").alias("text"),
-        F.when(F.col("event_type") == "click", F.lit("browser"))
-        .when(F.col("user_id") % 97 == 0, F.lit("shell"))
-        .alias("tool"),
-        "ts",
-    ).withColumn("part", F.date_format("ts", "yyyy-MM-dd"))
 
 
 def q_transcript_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,8 +115,8 @@ def q_transcript_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sgb_data_validator_spark.operators import rules as R
     from sgb_data_validator_spark.plans.pipeline import TranscriptTables, compute_violations
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    turns = turns_with_tool_dirt(ev)
+    ev = _t(spark, sf_dir, "events")
+    turns = events_turns(ev, F.col("props").alias("text"), tool_dirt(), "ts", day_part())
     convs = (
         ev.select("user_id").distinct()
         .where(F.col("user_id") % 7 != 0)
@@ -147,18 +135,8 @@ def q_transcript_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compute_violations(t, row_rules=rules, opening_roles=("view", "click"))
 
 
-_IN_TYPES = ", ".join(repr(x) for x in EVENT_TYPES)
-
 SQL_TRANSCRIPT_PIPELINE = f"""
-WITH turns AS (
-  SELECT 'u' || user_id::VARCHAR AS conv_id,
-         cast(row_number() OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST) - 1 AS int) AS turn_idx,
-         event_type AS role, props AS text,
-         CASE WHEN event_type = 'click' THEN 'browser'
-              WHEN user_id % 97 = 0 THEN 'shell' END AS tool,
-         ts, strftime(ts, '%Y-%m-%d') AS part
-  FROM events
-),
+WITH turns AS ({sql_events_turns("props AS text", SQL_TOOL_DIRT, "ts", SQL_DAY_PART)}),
 manifest AS (
   SELECT DISTINCT 'u' || user_id::VARCHAR AS conv_id FROM events WHERE user_id % 7 <> 0
   UNION ALL SELECT '{GHOST_CONV}'
@@ -243,7 +221,7 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     window top-1 → threshold; transformations.py:611-690)."""
     from sgb_data_validator_spark.operators.fuzzy import fuzzy_best_match
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _t(spark, sf_dir, "documents")
     fact = docs.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.concat(F.col("source"), F.lit("-x"), F.col("doc_id") % 10).alias("label"),
@@ -291,7 +269,7 @@ def q_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix expansion + arrays_overlap, no join."""
     from sgb_data_validator_spark.operators.fuzzy import hierarchical_membership_violations
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _t(spark, sf_dir, "documents")
     return hierarchical_membership_violations(docs, "doc_id", "source", HIER_VOCAB)
 
 
@@ -318,7 +296,7 @@ def q_qid_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined string carries the identical information."""
     from sgb_data_validator_spark.functions.native import extract_wikidata_qids
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _t(spark, sf_dir, "documents")
     injected = F.concat(
         F.col("text"), F.lit(" Q42 see Q42 and Q"), (F.col("doc_id") % 100)
     )
@@ -346,7 +324,7 @@ def q_transform_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python-regex territory, pytest-pinned instead). All three stage
     comparisons are conditional sums inside ONE aggregation over one
     scan — exactly how the job observes them on the write."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _t(spark, sf_dir, "documents")
     dirty = _dirty_text()
     c1 = native.normalize_whitespace(dirty)
     c2 = native.normalize_wikidata_url(c1)

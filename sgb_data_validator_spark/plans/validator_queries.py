@@ -7,8 +7,9 @@ checksums, and the per-partition severity-weighted health score.
 Same driver contract as every other plans module: (callable, oracle
 SQL) pairs over the driver testdata, every computed column aliased
 identically on both sides, counts cast bigint, floats rounded 4-6 dp.
-Transcript-shaped inputs reuse monitor_queries' canonical events→turns
-projection so the twins replay the identical derivation.
+Transcript-shaped inputs reuse the canonical events→turns projection
+(plans/constants.events_turns) so the twins replay the identical
+derivation.
 """
 
 from __future__ import annotations
@@ -16,14 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sgb_data_validator_spark.plans.constants import EVENT_TYPES, LANGS
-from sgb_data_validator_spark.plans.monitor_queries import (
-    _SQL_TURNS,
-    _SQL_TURNS_P,
-    _SQL_TURNS_P_TEXT,
-    _sql_turns,
+from sgb_data_validator_spark.plans.constants import (
+    EVENT_TYPES,
+    LANGS,
+    SQL_DAY_PART,
+    _IN_TYPES,
     _t,
-    _turns,
+    day_part,
+    events_turns,
+    sql_events_turns,
 )
 
 # ------------------------------------------------ transition legality
@@ -38,11 +40,11 @@ def q_transition_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
         repeat_transition_violations,
     )
 
-    return repeat_transition_violations(_turns(_t(spark, sf_dir, "events")))
+    return repeat_transition_violations(events_turns(_t(spark, sf_dir, "events")))
 
 
 SQL_TRANSITION_REPEAT = f"""
-WITH turns AS ({_SQL_TURNS})
+WITH turns AS ({sql_events_turns()})
 SELECT 'transition.repeat' AS rule_id,
        a.conv_id,
        cast(a.turn_idx + 1 AS int) AS turn_idx,
@@ -444,7 +446,7 @@ def q_closing_role(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_CLOSING_ROLE = f"""
-WITH turns AS ({_SQL_TURNS_P}),
+WITH turns AS ({sql_events_turns(SQL_DAY_PART)}),
 last_turn AS (SELECT conv_id, max(turn_idx) AS turn_idx FROM turns GROUP BY 1)
 SELECT 'conv.closing_role' AS rule_id, t.conv_id,
        cast(t.turn_idx AS int) AS turn_idx, 'role' AS "column",
@@ -656,12 +658,12 @@ def q_repeat_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sgb_data_validator_spark.operators.windows import repeat_text_violations
 
     ev = _t(spark, sf_dir, "events")
-    turns = _turns(ev, with_part=True, text_col="props")
+    turns = events_turns(ev, F.col("props").alias("text"), day_part())
     return repeat_text_violations(turns, text_col="text", min_repeats=2)
 
 
 SQL_REPEAT_TEXT = f"""
-WITH turns AS ({_SQL_TURNS_P_TEXT}),
+WITH turns AS ({sql_events_turns("props AS text", SQL_DAY_PART)}),
 g AS (
   SELECT conv_id,
          ('0x' || substr(md5(text), 1, 15))::BIGINT AS fp,
@@ -700,7 +702,10 @@ def q_tool_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sgb_data_validator_spark.operators.windows import sequence_violations
 
     ev = _t(spark, sf_dir, "events")
-    turns = _turns(ev, with_part=True, with_tool=True)
+    # the deterministic caller mapping: a 'view' turn with value > 250
+    # invokes tool 'chk'; every other turn carries NULL
+    chk = F.when((F.col("event_type") == "view") & (F.col("value") > 250.0), "chk")
+    turns = events_turns(ev, chk.alias("tool"), day_part())
     return sequence_violations(
         turns,
         check_monotonic_ts=False,
@@ -710,8 +715,10 @@ def q_tool_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SQL_CHK_TOOL = "CASE WHEN event_type = 'view' AND value > 250 THEN 'chk' END AS tool"
+
 SQL_TOOL_PAIRING = f"""
-WITH turns AS ({_sql_turns(with_part=True, with_tool=True)}),
+WITH turns AS ({sql_events_turns(_SQL_CHK_TOOL, SQL_DAY_PART)}),
 x AS (
   SELECT *,
          lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role,
@@ -772,13 +779,11 @@ def q_health_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_health_score() -> str:
-    vocab = ", ".join(repr(x) for x in EVENT_TYPES)
-    return f"""
+SQL_HEALTH_SCORE = f"""
 WITH per AS (
   SELECT strftime(ts, '%Y-%m-%d') AS part,
          cast(count(*) AS bigint) AS n,
-         cast(sum(CASE WHEN event_type NOT IN ({vocab}) THEN 1 ELSE 0 END) AS bigint) AS errors,
+         cast(sum(CASE WHEN event_type NOT IN ({_IN_TYPES}) THEN 1 ELSE 0 END) AS bigint) AS errors,
          cast(sum(CASE WHEN value > 250.0 THEN 1 ELSE 0 END) AS bigint) AS warnings
   FROM events GROUP BY 1
 )
@@ -791,9 +796,6 @@ SELECT part, n, errors, warnings,
             ELSE 'F' END AS grade
 FROM per
 """
-
-
-SQL_HEALTH_SCORE = _sql_health_score()
 
 
 VALIDATOR_QUERIES: dict[str, tuple] = {

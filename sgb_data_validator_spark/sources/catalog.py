@@ -70,9 +70,11 @@ def write_table(
     only the partitions present in ``df`` are replaced.
 
     * path (or fmt="parquet") → dynamic-overwrite partitioned parquet,
-    * dotted name (or fmt="table") → ``saveAsTable`` with the same
-      dynamic overwrite (the session catalog; with an Iceberg catalog
-      configured this is the V2 path),
+    * dotted name (or fmt="table") → ``saveAsTable`` to create the
+      table, ``insertInto(overwrite=True)`` with the same dynamic
+      overwrite once it exists (``saveAsTable`` in overwrite mode would
+      replace the whole table; the session catalog, or the V2 path with
+      an Iceberg catalog configured),
     * fmt="iceberg" → ``writeTo(ref).overwritePartitions()``, failing
       with the same actionable message as the reader when the runtime
       lacks the plugin.
@@ -93,6 +95,12 @@ def write_table(
     as_table = fmt == "table" or (
         fmt is None and "/" not in ref and not os.path.exists(ref)
     )
+    if as_table and df.sparkSession.catalog.tableExists(ref):
+        # insertInto matches columns by position, not by name
+        df.select(*df.sparkSession.table(ref).columns).write.option(
+            "partitionOverwriteMode", "dynamic"
+        ).insertInto(ref, overwrite=True)
+        return
     writer = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     if part:
         writer = writer.partitionBy(part)

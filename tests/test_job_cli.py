@@ -237,6 +237,16 @@ def test_rules_spec_replaces_default_suite(spark, tmp_path):
             "--rules-spec", bad_path,
         ]))
 
+    # an empty suite fails at load too, instead of passing vacuously
+    empty_path = f"{base}/empty.json"
+    with open(empty_path, "w") as fh:
+        json.dump([], fh)
+    with pytest.raises(ValueError, match="empty rule suite"):
+        run(spark, parse_args([
+            "--turns", f"{base}/fx/turns", "--out", f"{base}/empty_report",
+            "--rules-spec", empty_path,
+        ]))
+
 
 def test_certify_target_unattested_partitions_escalate(spark, tmp_path):
     """A sample rate too small to touch a partition must escalate it to
@@ -267,15 +277,18 @@ def test_certify_target_unattested_partitions_escalate(spark, tmp_path):
 
 
 def test_certify_with_quoted_rule_id_and_partition_consistency(spark, tmp_path):
-    """A rule_id containing a single quote (user data from --rules-spec)
-    must not break the certificate's unpivot, and --partition-consistency
-    must extend the certified family the same way the full run extends
-    its rules."""
+    """A rule_id containing a single quote or a backslash (user data
+    from --rules-spec) must reach the certificate verbatim, and
+    --partition-consistency must extend the certified family the same
+    way the full run extends its rules."""
     import json
 
     base = str(tmp_path)
     write_fixture_tables(spark, FixtureConfig(n_turns=1500), f"{base}/fx")
-    spec = [{"rule": "not_null", "column": "text", "rule_id": "ops' check"}]
+    spec = [
+        {"rule": "not_null", "column": "text", "rule_id": "ops' check"},
+        {"rule": "non_empty", "column": "text", "rule_id": "rule\\bslash"},
+    ]
     with open(f"{base}/suite.json", "w") as fh:
         json.dump(spec, fh)
     rc = run(spark, parse_args([
@@ -289,4 +302,5 @@ def test_certify_with_quoted_rule_id_and_partition_consistency(spark, tmp_path):
     cert = spark.read.parquet(f"{base}/q_report/certificate")
     rules = {r.rule_id for r in cert.collect()}
     assert "ops' check" in rules           # quote survived as data
+    assert "rule\\bslash" in rules         # backslash too, not a \b escape
     assert "part.ts_mismatch" in rules     # opt-in rule certified too

@@ -371,3 +371,23 @@ def test_resume_filter_prunes_partitions_at_scan(spark, turns_parquet):
     assert all(p in pf for p in pending)          # pending days pruned IN
     # and no residual row-level Filter node doing the partition work
     assert "PartitionFilters: []" not in plan
+
+
+def test_user_ordered_projection_lives_only_in_constants():
+    """The events→transcript ordering (per-user window ordered by ts,
+    event_id) has ONE definition, plans/constants.py: every other plans
+    module calls events_turns / sql_events_turns. Per-user windows
+    ordered by event_id alone (ts_monotonicity) are a different decision
+    — ordering by ts would hide its injected rewinds — and stay."""
+    import pathlib
+    import re
+
+    from sgb_data_validator_spark import plans
+
+    py = re.compile(r'Window\.partitionBy\("user_id"\)\.orderBy\(\s*(?:F\.col\()?"ts"')
+    sql = re.compile(r'PARTITION BY user_id["\s]*ORDER BY ts\b', re.IGNORECASE)
+    evid = re.compile(r"PARTITION BY user_id ORDER BY event_id\b")
+    sources = {p.name: p.read_text() for p in pathlib.Path(plans.__file__).parent.glob("*.py")}
+    assert sorted(n for n, s in sources.items() if py.search(s)) == ["constants.py"]
+    assert sorted(n for n, s in sources.items() if sql.search(s)) == ["constants.py"]
+    assert evid.search(sources["driver_queries.py"])  # allowed, not matched above

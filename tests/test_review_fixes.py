@@ -131,6 +131,15 @@ def test_write_table_catalog_roundtrip(spark, tmp_path):
         write_table(df, name, "table")
         back = read_table(spark, name, "table")
         assert back.count() == 2 and set(back.columns) == {"id", "v", "part"}
+        # a second write to an existing table replaces only its own day
+        # (columns deliberately out of table order)
+        day3 = spark.createDataFrame(
+            [("2024-01-03", "c", 3), ("2024-01-02", "b2", 4)],
+            "part string, v string, id bigint",
+        )
+        write_table(day3, name, "table")
+        got = sorted(tuple(r) for r in read_table(spark, name, "table").select("id", "v", "part").collect())
+        assert got == [(1, "a", "2024-01-01"), (3, "c", "2024-01-03"), (4, "b2", "2024-01-02")]
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
     # path target still writes parquet
