@@ -110,9 +110,15 @@ def transformed_with_metrics(
     for free by whatever single action materializes the frame (the
     table write, or the dry-run aggregation)."""
     stages = staged_pipeline(F.col("text"), exact_unicode=exact_unicode)
+    names = [name for name, _ in stages]
+    # project every stage ONCE, below observe, and refer to it by name
+    # above: an expression repeated on both sides of observe is planned
+    # twice, so the pandas-UDF stage would run twice per row
+    staged = turns.select("*", *[cur.alias(f"__{name}") for name, cur in stages])
     prev: Column = F.col("text")
     metrics = [F.count(F.lit(1)).alias("rows")]
-    for name, cur in stages:
+    for name in names:
+        cur = F.col(f"__{name}")
         # null-safe: NULL text stays NULL through the chain and is
         # never "changed"
         metrics.append(
@@ -124,8 +130,12 @@ def transformed_with_metrics(
     # ORIGINAL text column; attaching them after withColumn("text", …)
     # would re-resolve every F.col("text") against the transformed
     # output and count zero changes
-    out = turns.observe(obs, *metrics).withColumn("text", stages[-1][1])
-    return out, obs, [name for name, _ in stages]
+    out = (
+        staged.observe(obs, *metrics)
+        .withColumn("text", F.col(f"__{names[-1]}"))
+        .drop(*[f"__{name}" for name in names])
+    )
+    return out, obs, names
 
 
 def run(spark: SparkSession, args: argparse.Namespace) -> int:

@@ -157,7 +157,8 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         "rather than passing silently. Certified partitions are NOT "
         "recorded in the ledger — a certificate is not a validation, so "
         "--resume re-certifies them at sample cost on later runs "
-        "(requires --certify-bp; mutually exclusive with --certify-only)",
+        "(requires --certify-bp; mutually exclusive with --certify-only "
+        "and --reconcile-manifest)",
     )
     p.add_argument(
         "--streaming",
@@ -175,6 +176,10 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         p.error("--certify-only/--certify-target require --certify-bp")
     if args.certify_only and args.certify_target:
         p.error("--certify-only and --certify-target are mutually exclusive")
+    if args.reconcile_manifest and args.certify_target:
+        # the turn-count reconcile needs every turn of a conversation;
+        # --certify-target validates only the escalated partitions
+        p.error("--reconcile-manifest and --certify-target are mutually exclusive")
     if args.certify_bp is not None and not 0 < args.certify_bp <= 10_000:
         p.error("--certify-bp must be in 1..10000 (basis points of the table)")
     return args
@@ -386,10 +391,23 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
             keep = F.col("part").isin([p for p in escalate if p is not None])
             if any(p is None for p in escalate):
                 keep = keep | F.col("part").isNull()
+            skipped = turns.where(~F.coalesce(keep, F.lit(False)))
             turns = turns.where(keep)
+            # a conversation whose turns all lie in certified partitions
+            # is not empty: drop it from the manifest side of the
+            # referential checks. Conversations with no turns anywhere
+            # stay, so `empty.conversation` still reports them.
+            conversations = t.conversations
+            if conversations is not None:
+                certified_only = skipped.select("conv_id").join(
+                    turns.select("conv_id"), "conv_id", "left_anti"
+                )
+                conversations = conversations.join(
+                    certified_only, "conv_id", "left_anti"
+                )
             t = TranscriptTables(
                 turns=turns,
-                conversations=t.conversations,
+                conversations=conversations,
                 allowed_tools=t.allowed_tools,
                 baseline_stats=t.baseline_stats,
             )
@@ -443,7 +461,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
     # compute the fact-derived frames ONCE: the fan-out below (6 sinks +
     # ledger + console verdicts) is ~8 actions, each of which would
     # otherwise re-execute the multi-scan violations DAG from the fact
-    result = materialize(result, turns)
+    result = materialize(result)
     sinks.write_all(result, args.out)
     elapsed = time.perf_counter() - t0
 

@@ -8,9 +8,14 @@ human-reviewed profiling snapshot, /root/reference/src/profiling.py:57-83):
 * temporal drift — chi-square of the per-partition hour-of-ts histogram
   vs baseline expected counts:  χ² = Σ_b (obs_b − exp_b)² / exp_b
 
-Both are pure column math over a groupBy(part, value) count — one
-shuffle keyed by (part, value), then a broadcast join against the tiny
-baseline dim, then a groupBy(part) reduction. No UDFs.
+Every statistic reads ONE frequency table, :func:`categorical_freqs`:
+each row becomes one (dim, value) cell per audited dimension (an
+explode over structs), then one groupBy(part, dim, value) count — a
+single shuffle for all dimensions at once — and a window total per
+(part, dim) on the aggregated frame. KL and χ² join that table with the
+broadcast baseline on (dim, value) and reduce per (part, dim); PSI, JS,
+KS and W1 expand it to the full parts × baseline-values grid first
+(:func:`_full_grid`). No UDFs.
 
 Smoothing: categories absent from the baseline get q = epsilon so a
 brand-new category produces a large-but-finite KL contribution instead
@@ -19,23 +24,51 @@ of infinity.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 EPSILON = 1e-6
+HOUR_DIM = "ts_hour_bucket"
 
 
-def categorical_freqs(turns: DataFrame, dim: str, value_col) -> DataFrame:
-    """Per-(part, value) relative frequency for one categorical dimension."""
+def _hour() -> Column:
+    return F.hour("ts").cast("string")
+
+
+def categorical_freqs(turns: DataFrame, dims: dict[str, Column]) -> DataFrame:
+    """(part, dim, value, n, total, p) — per-partition value frequencies
+    of every ``{dim: value column}`` entry, from one scan and one
+    groupBy(part, dim, value). NULL values and NULL-keyed partitions are
+    not counted."""
+    cells = F.explode(
+        F.array(*[F.struct(F.lit(d).alias("dim"), c.alias("value")) for d, c in dims.items()])
+    )
     counts = (
-        turns.where(value_col.isNotNull())
-        .groupBy(F.col("part").cast("string").alias("part"), value_col.alias("value"))
+        turns.select(F.col("part").cast("string").alias("part"), cells.alias("c"))
+        .select("part", "c.dim", "c.value")
+        .where(F.col("value").isNotNull() & F.col("part").isNotNull())
+        .groupBy("part", "dim", "value")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    totals = counts.groupBy("part").agg(F.sum("n").alias("total"))
-    return (
-        counts.join(totals, "part")
-        .select("part", F.lit(dim).alias("dim"), "value", (F.col("n") / F.col("total")).alias("p"), "n", "total")
+    total = F.sum("n").over(Window.partitionBy("part", "dim"))
+    return counts.select(
+        "part", "dim", "value", "n", total.alias("total"), (F.col("n") / total).alias("p")
+    )
+
+
+def _scores(freqs: DataFrame, baseline: DataFrame) -> DataFrame:
+    """(part, dim, kl, chi2, n_obs) — each (part, dim) of the frequency
+    table against the broadcast baseline; a value the baseline lacks
+    gets q = EPSILON."""
+    q = baseline.select("dim", "value", F.col("freq").alias("q"))
+    joined = freqs.join(F.broadcast(q), ["dim", "value"], "left").withColumn(
+        "q", F.coalesce(F.col("q"), F.lit(EPSILON))
+    )
+    expected = F.col("q") * F.col("total")
+    return joined.groupBy("part", "dim").agg(
+        F.sum(F.col("p") * F.log(F.col("p") / F.col("q"))).alias("kl"),
+        F.sum(F.pow(F.col("n") - expected, F.lit(2)) / expected).alias("chi2"),
+        F.first("total").alias("n_obs"),
     )
 
 
@@ -44,33 +77,27 @@ def kl_divergence(
 ) -> DataFrame:
     """(part, dim, kl) — KL(p_partition ‖ q_baseline)."""
     value_col = value_col if value_col is not None else F.col(dim)
-    p = categorical_freqs(turns, dim, value_col)
-    q = baseline.where(F.col("dim") == dim).select("value", F.col("freq").alias("q"))
-    joined = p.join(F.broadcast(q), "value", "left").withColumn(
-        "q", F.coalesce(F.col("q"), F.lit(EPSILON))
-    )
-    return (
-        joined.groupBy("part")
-        .agg(
-            F.sum(F.col("p") * F.log(F.col("p") / F.col("q"))).alias("kl"),
-            F.first("total").alias("n_obs"),
-        )
-        .select("part", F.lit(dim).alias("dim"), "kl", "n_obs")
-    )
+    freqs = categorical_freqs(turns, {dim: value_col})
+    return _scores(freqs, baseline).select("part", "dim", "kl", "n_obs")
 
 
-def ts_chi_square(turns: DataFrame, baseline: DataFrame, dim: str = "ts_hour_bucket") -> DataFrame:
+def ts_chi_square(turns: DataFrame, baseline: DataFrame, dim: str = HOUR_DIM) -> DataFrame:
     """(part, dim, chi2) — hour-of-day histogram vs baseline expectation."""
-    obs = categorical_freqs(turns, dim, F.hour("ts").cast("string"))
+    freqs = categorical_freqs(turns, {dim: _hour()})
+    return _scores(freqs, baseline).select("part", "dim", "chi2")
+
+
+def _full_grid(freqs: DataFrame, baseline: DataFrame, dim: str, fill: float) -> DataFrame:
+    """(part, value, p, q) over every partition × (its values ∪ the
+    baseline's values for ``dim``); the side lacking a value gets
+    ``fill``. The (parts × baseline values) grid is tiny and broadcast."""
+    p = freqs.select("part", "value", "p")
     q = baseline.where(F.col("dim") == dim).select("value", F.col("freq").alias("q"))
-    joined = obs.join(F.broadcast(q), "value", "left").withColumn(
-        "q", F.coalesce(F.col("q"), F.lit(EPSILON))
-    )
-    expected = F.col("q") * F.col("total")
+    grid = p.select("part").distinct().crossJoin(F.broadcast(q))
     return (
-        joined.groupBy("part")
-        .agg(F.sum(F.pow(F.col("n") - expected, F.lit(2)) / expected).alias("chi2"))
-        .select("part", F.lit(dim).alias("dim"), "chi2")
+        p.join(grid, ["part", "value"], "full")
+        .withColumn("p", F.coalesce(F.col("p"), F.lit(fill)))
+        .withColumn("q", F.coalesce(F.col("q"), F.lit(fill)))
     )
 
 
@@ -79,18 +106,9 @@ def psi(turns: DataFrame, baseline: DataFrame, dim: str, value_col=None) -> Data
     score: Σ_v (p_v − q_v)·ln(p_v/q_v). Unlike KL it is symmetric in
     spirit (both directions of shift contribute positively) and includes
     baseline categories MISSING from the partition (p smoothed to ε), so
-    a vanished category registers. Plan shape: the per-(part, value)
-    count shuffle from categorical_freqs, a broadcast of the tiny
-    (parts × baseline-categories) grid, and a per-part reduction."""
+    a vanished category registers."""
     value_col = value_col if value_col is not None else F.col(dim)
-    p = categorical_freqs(turns, dim, value_col).select("part", "value", "p")
-    q = baseline.where(F.col("dim") == dim).select("value", F.col("freq").alias("q"))
-    grid = p.select("part").distinct().crossJoin(F.broadcast(q))
-    joined = (
-        p.join(grid, ["part", "value"], "full")
-        .withColumn("p", F.coalesce(F.col("p"), F.lit(EPSILON)))
-        .withColumn("q", F.coalesce(F.col("q"), F.lit(EPSILON)))
-    )
+    joined = _full_grid(categorical_freqs(turns, {dim: value_col}), baseline, dim, EPSILON)
     return (
         joined.groupBy("part")
         .agg(F.sum((F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))).alias("psi"))
@@ -106,30 +124,21 @@ def js_divergence(
     with m = (p+q)/2. The symmetric, BOUNDED (≤ ln 2) member of the
     drift family — unlike KL it cannot blow up on a category the other
     side lacks, so one alert threshold works across dimensions with
-    very different cardinalities. Same full-grid ε-smoothing as psi()
-    (vanished and brand-new categories both register), same plan shape:
-    one (part, value) count shuffle, broadcast baseline grid, per-part
-    reduction."""
+    very different cardinalities. Same full-grid ε-smoothing as psi():
+    vanished and brand-new categories both register."""
     value_col = value_col if value_col is not None else F.col(dim)
-    p = categorical_freqs(turns, dim, value_col).select("part", "value", "p")
-    return js_divergence_from_freqs(p, baseline, dim)
+    return js_divergence_from_freqs(categorical_freqs(turns, {dim: value_col}), baseline, dim)
 
 
 def js_divergence_from_freqs(
     p: DataFrame, baseline: DataFrame, dim: str
 ) -> DataFrame:
-    """JS core over a PRE-NORMALIZED (part, value, p) frequency frame —
+    """JS core over a PRE-NORMALIZED (part, value, p, …) frequency frame —
     the shared math :func:`js_divergence` (batch, from raw rows) and the
     streaming drift monitor (from finalized windowed counts) both
     delegate to, so batch/stream parity is by construction: same grid,
     same ε-smoothing, same reduction."""
-    q = baseline.where(F.col("dim") == dim).select("value", F.col("freq").alias("q"))
-    grid = p.select("part").distinct().crossJoin(F.broadcast(q))
-    joined = (
-        p.join(grid, ["part", "value"], "full")
-        .withColumn("p", F.coalesce(F.col("p"), F.lit(EPSILON)))
-        .withColumn("q", F.coalesce(F.col("q"), F.lit(EPSILON)))
-    )
+    joined = _full_grid(p, baseline, dim, EPSILON)
     m = (F.col("p") + F.col("q")) / 2
     term = 0.5 * F.col("p") * F.log(F.col("p") / m) + 0.5 * F.col("q") * F.log(
         F.col("q") / m
@@ -141,10 +150,25 @@ def js_divergence_from_freqs(
     )
 
 
+def _cdfs(turns: DataFrame, baseline: DataFrame, dim: str, value_col) -> DataFrame:
+    """(part, _b, cp, cq) — partition and baseline CDFs over ORDERED
+    integer buckets ``_b``. Zero cells are exact (no smoothing). The CDF
+    window runs on the O(parts × buckets) grid, never on the fact."""
+    value_col = value_col if value_col is not None else _hour()
+    joined = _full_grid(categorical_freqs(turns, {dim: value_col}), baseline, dim, 0.0)
+    w = Window.partitionBy("part").orderBy(F.col("value").cast("int"))
+    return joined.select(
+        "part",
+        F.col("value").cast("int").alias("_b"),
+        F.sum("p").over(w).alias("cp"),
+        F.sum("q").over(w).alias("cq"),
+    )
+
+
 def ks_statistic(
     turns: DataFrame,
     baseline: DataFrame,
-    dim: str = "ts_hour_bucket",
+    dim: str = HOUR_DIM,
     value_col=None,
 ) -> DataFrame:
     """(part, dim, ks) — two-sample Kolmogorov–Smirnov distance between
@@ -156,29 +180,10 @@ def ks_statistic(
 
     No smoothing: a bucket absent from one side contributes p (or q) = 0
     exactly — KS is well-defined on zero cells, unlike KL/PSI.
-
-    Plan shape: the (part, value) count shuffle from categorical_freqs
-    reduces the fact to O(parts × 24) rows; the CDF window and the
-    per-part max then run on that tiny frame (one exchange keyed by
-    part). The baseline grid is broadcast, the fact is scanned once.
     """
-    value_col = value_col if value_col is not None else F.hour("ts").cast("string")
-    p = categorical_freqs(turns, dim, value_col).select("part", "value", "p")
-    q = baseline.where(F.col("dim") == dim).select("value", F.col("freq").alias("q"))
-    grid = p.select("part").distinct().crossJoin(F.broadcast(q))
-    joined = (
-        p.join(grid, ["part", "value"], "full")
-        .withColumn("p", F.coalesce(F.col("p"), F.lit(0.0)))
-        .withColumn("q", F.coalesce(F.col("q"), F.lit(0.0)))
-    )
-    w = Window.partitionBy("part").orderBy(F.col("value").cast("int"))
-    cum = joined.select(
-        "part",
-        F.sum("p").over(w).alias("cp"),
-        F.sum("q").over(w).alias("cq"),
-    )
     return (
-        cum.groupBy("part")
+        _cdfs(turns, baseline, dim, value_col)
+        .groupBy("part")
         .agg(F.max(F.abs(F.col("cp") - F.col("cq"))).alias("ks"))
         .select("part", F.lit(dim).alias("dim"), "ks")
     )
@@ -187,7 +192,7 @@ def ks_statistic(
 def wasserstein(
     turns: DataFrame,
     baseline: DataFrame,
-    dim: str = "ts_hour_bucket",
+    dim: str = HOUR_DIM,
     value_col=None,
 ) -> DataFrame:
     """(part, dim, w1) — first Wasserstein (earth-mover) distance between
@@ -205,35 +210,17 @@ def wasserstein(
     KS underweights, and its unit is "buckets of displacement", directly
     interpretable as e.g. "traffic moved 2.3 hours later".
 
-    Zero cells are exact (no smoothing), like KS. Plan shape identical to
-    ks_statistic: the fact collapses to O(parts × buckets) rows in ONE
-    (part, value) count shuffle, the baseline is broadcast, and the CDF
-    window + per-part reduction run on the tiny frame.
+    Zero cells are exact (no smoothing), like KS, and the CDFs are the
+    same (:func:`_cdfs`).
     """
-    value_col = value_col if value_col is not None else F.hour("ts").cast("string")
-    p = categorical_freqs(turns, dim, value_col).select("part", "value", "p")
-    q = baseline.where(F.col("dim") == dim).select("value", F.col("freq").alias("q"))
-    grid = p.select("part").distinct().crossJoin(F.broadcast(q))
-    joined = (
-        p.join(grid, ["part", "value"], "full")
-        .withColumn("p", F.coalesce(F.col("p"), F.lit(0.0)))
-        .withColumn("q", F.coalesce(F.col("q"), F.lit(0.0)))
-    )
-    w = Window.partitionBy("part").orderBy(F.col("value").cast("int"))
     # each |ΔCDF| persists until the NEXT present bucket, so weight it
     # by that gap — summing only over present buckets would under-count
     # displacement across integer buckets absent from BOTH sides (all
     # mass at 0 vs all mass at 5 with 1..4 empty is W1=5, not 1). The
     # last bucket's ΔCDF is ~0 (both CDFs reach 1); its weight defaults
     # to 1 so float residue contributes at most one unit of itself.
-    cum = joined.select(
-        "part",
-        F.col("value").cast("int").alias("_b"),
-        F.sum("p").over(w).alias("cp"),
-        F.sum("q").over(w).alias("cq"),
-    )
     w_b = Window.partitionBy("part").orderBy("_b")
-    cum = cum.withColumn(
+    cum = _cdfs(turns, baseline, dim, value_col).withColumn(
         "_gap",
         F.coalesce(F.lead("_b").over(w_b) - F.col("_b"), F.lit(1)).cast("double"),
     )
@@ -251,7 +238,9 @@ def drift_violations(
     kl_chi2_crit: float = 40.0,
     chi2_threshold: float = 100.0,  # χ²(23) crit at p≈1e-11 — hour histograms
 ) -> DataFrame:
-    """Partition-level violations in the canonical violations schema.
+    """Partition-level violations in the canonical violations schema:
+    ``drift.kl.role`` / ``drift.kl.tool`` and ``drift.chi2.ts``, all
+    scored from ONE frequency table (one scan of ``turns``).
 
     The KL trigger is scale-aware: under H0 (no drift), 2·n·KL is
     asymptotically χ²(k−1), so a partition drifts only when BOTH the
@@ -259,31 +248,26 @@ def drift_violations(
     kl_chi2_crit) are large — small partitions don't false-positive on
     sampling noise, huge partitions don't alert on negligible shifts.
     """
-    kls = kl_divergence(turns, baseline, "role").unionByName(
-        kl_divergence(turns, baseline, "tool")
+    freqs = categorical_freqs(
+        turns, {"role": F.col("role"), "tool": F.col("tool"), HOUR_DIM: _hour()}
     )
-    kl_v = kls.where(
-        (F.col("kl") > kl_threshold) & (2.0 * F.col("n_obs") * F.col("kl") > kl_chi2_crit)
-    ).select(
-        F.concat(F.lit("drift.kl."), F.col("dim")).alias("rule_id"),
+    is_ts = F.col("dim") == HOUR_DIM
+    kl, chi2 = F.col("kl"), F.col("chi2")
+    fired = F.when(is_ts, chi2 > chi2_threshold).otherwise(
+        (kl > kl_threshold) & (2.0 * F.col("n_obs") * kl > kl_chi2_crit)
+    )
+    return _scores(freqs, baseline).where(fired).select(
+        F.when(is_ts, F.lit("drift.chi2.ts"))
+        .otherwise(F.concat(F.lit("drift.kl."), F.col("dim")))
+        .alias("rule_id"),
         F.lit(None).cast("string").alias("conv_id"),
         F.lit(None).cast("int").alias("turn_idx"),
-        F.col("dim").alias("column"),
-        F.round("kl", 6).cast("string").alias("offending_value"),
+        F.when(is_ts, F.lit("ts")).otherwise(F.col("dim")).alias("column"),
+        F.when(is_ts, F.round(chi2, 3)).otherwise(F.round(kl, 6)).cast("string")
+        .alias("offending_value"),
         F.lit("error").alias("severity"),
         "part",
     )
-    chi = ts_chi_square(turns, baseline)
-    chi_v = chi.where(F.col("chi2") > chi2_threshold).select(
-        F.lit("drift.chi2.ts").alias("rule_id"),
-        F.lit(None).cast("string").alias("conv_id"),
-        F.lit(None).cast("int").alias("turn_idx"),
-        F.lit("ts").alias("column"),
-        F.round("chi2", 3).cast("string").alias("offending_value"),
-        F.lit("error").alias("severity"),
-        "part",
-    )
-    return kl_v.unionByName(chi_v)
 
 
 def novel_entities(

@@ -205,10 +205,8 @@ def q_violation_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     viol = q_transcript_pipeline(spark, sf_dir)
     ev = _t(spark, sf_dir, "events")
-    n_total = (
-        ev.select("user_id")
-        .distinct()
-        .agg((F.count(F.lit(1)) + 1).cast("bigint").alias("n_total"))
+    n_total = ev.agg(
+        (F.countDistinct("user_id") + 1).cast("bigint").alias("n_total")
     )
     return violation_cooccurrence(viol, n_total)
 

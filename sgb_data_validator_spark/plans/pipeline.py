@@ -15,10 +15,12 @@ DataFrames:
 * exit-code contract: ``ValidationResult.passed`` is False iff any
   error exists anywhere (driver-side small collect of verdicts).
 
-Scale notes: the row rules, uniqueness, referential, sequence, and
-drift families each read the fact table once; Spark caches nothing by
-default here — callers validating the same partition set repeatedly
-should persist the pruned scan. All dimension joins are broadcast.
+Scale notes: the default violations plan reads the fact table 9 times
+(pinned by tests/test_windows_stats_drift.py): once for each family and
+each referential check, twice for the sequence rules (window pass plus
+chunk-boundary carry). Spark caches nothing by default here — callers
+validating the same partition set repeatedly should persist the pruned
+scan. All dimension joins are broadcast.
 """
 
 from __future__ import annotations
@@ -265,10 +267,12 @@ def compute_violations(
     return v
 
 
-def compute_verdicts(turns: DataFrame, violations: DataFrame) -> DataFrame:
+def compute_verdicts(partitioned: DataFrame, violations: DataFrame) -> DataFrame:
     """Per-partition pass/fail. Partitions with zero violations PASS too,
-    so verdicts start from the fact table's partition list."""
-    parts = turns.select(F.col("part").cast("string").alias("part")).distinct()
+    so verdicts start from the partition list of ``partitioned``: the
+    fact table, or any frame with a row for every partition of it (the
+    stats frame)."""
+    parts = partitioned.select(F.col("part").cast("string").alias("part")).distinct()
     counts = (
         violations.where(F.col("part").isNotNull())
         .groupBy("part")
@@ -333,7 +337,7 @@ def validate(
     return ValidationResult(violations=violations, verdicts=verdicts, stats=stats)
 
 
-def materialize(result: ValidationResult, turns: DataFrame) -> ValidationResult:
+def materialize(result: ValidationResult) -> ValidationResult:
     """Compute the fact-derived frames ONCE before a multi-artifact
     fan-out.
 
@@ -348,7 +352,9 @@ def materialize(result: ValidationResult, turns: DataFrame) -> ValidationResult:
 
     ``localCheckpoint`` (MEMORY_AND_DISK on the executors) materializes
     violations and stats eagerly; verdicts is rebuilt ON the
-    materialized violations and checkpointed too (it is O(parts)).
+    materialized violations, with the partition list of the
+    materialized stats (a row per partition, NULL-keyed included), and
+    checkpointed too (it is O(parts)).
     Downstream actions then scan the checkpointed blocks — the fact is
     never re-read. The violation/verdict/stats VALUES are identical to
     the lazy result's (pinned by
@@ -357,7 +363,7 @@ def materialize(result: ValidationResult, turns: DataFrame) -> ValidationResult:
     than the fact; stats and verdicts are O(parts × columns)."""
     viol = result.violations.localCheckpoint()
     stats = result.stats.localCheckpoint()
-    verdicts = compute_verdicts(turns, viol).localCheckpoint()
+    verdicts = compute_verdicts(stats, viol).localCheckpoint()
     return ValidationResult(violations=viol, verdicts=verdicts, stats=stats)
 
 

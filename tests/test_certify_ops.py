@@ -226,6 +226,45 @@ def test_violation_cooccurrence_unordered_pairs_once(spark):
     assert got == [("x", "y"), ("x", "z"), ("y", "z")]
 
 
+def test_violation_cooccurrence_query_ignores_null_user(spark, tmp_path):
+    """The registry query's population N counts distinct non-NULL users,
+    as its SQL twin does: an event with a NULL user_id is no
+    conversation, so the lifts agree with DuckDB's."""
+    import duckdb
+
+    from sgb_data_validator_spark.plans.certify_queries import (
+        _sql_violation_cooccurrence,
+        q_violation_cooccurrence,
+    )
+
+    # user 97 gets the stray 'shell' tool on its view turns, so
+    # ref.tool and tool.role_consistency co-fire there
+    rows = [
+        (1, "2024-01-01 10:00:00", 97, "view", 1.0, "a"),
+        (2, "2024-01-01 10:01:00", 97, "view", 1.0, "b"),
+        (3, "2024-01-01 10:02:00", 1, "view", 1.0, "c"),
+        (4, "2024-01-01 10:03:00", 2, "click", 1.0, "d"),
+        (5, "2024-01-01 10:04:00", None, "view", 1.0, "e"),
+    ]
+    ev = spark.createDataFrame(
+        rows, "event_id bigint, ts string, user_id bigint, event_type string, value double, props string"
+    ).withColumn("ts", F.to_timestamp("ts"))
+    d = f"{tmp_path}/sf"
+    ev.coalesce(1).write.parquet(f"{d}/events.parquet")
+    got = sorted(
+        (r.rule_a, r.rule_b, r.n_both, r.n_a, r.n_b, r.lift)
+        for r in q_violation_cooccurrence(spark, d).collect()
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{d}/events.parquet/*.parquet'")
+    want = sorted(
+        (a, b, n, na, nb, float(lift))
+        for a, b, n, na, nb, lift in con.execute(_sql_violation_cooccurrence()).fetchall()
+    )
+    assert ("ref.tool", "tool.role_consistency") in {r[:2] for r in got}
+    assert got == want
+
+
 # ------------------------------------------------- per-part certificates
 
 def test_cert_by_part_sums_to_global(spark):

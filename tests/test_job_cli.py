@@ -146,11 +146,15 @@ def test_certify_requires_bp():
 def test_certify_target_validates_only_suspect_partitions(spark, tmp_path):
     """--certify-target: per-partition certificates route only the
     non-certified partitions into the full validation (the clean day 0
-    is attested by certificate and skipped)."""
+    is attested by certificate and skipped), and the conversations
+    manifest is checked only for the escalated turns' conversations and
+    the conversations with no turns at all."""
     base = str(tmp_path)
-    write_fixture_tables(spark, FixtureConfig(n_turns=4000), f"{base}/fx")
+    cfg = FixtureConfig(n_turns=4000)
+    write_fixture_tables(spark, cfg, f"{base}/fx")
     argv = [
         "--turns", f"{base}/fx/turns",
+        "--conversations", f"{base}/fx/conversations",
         "--out", f"{base}/target_report",
         "--certify-bp", "10000",
         "--certify-tol", "0.02",
@@ -170,6 +174,23 @@ def test_certify_target_validates_only_suspect_partitions(spark, tmp_path):
     verdicts = spark.read.parquet(f"{base}/target_report/verdicts")
     validated = {str(r.part) for r in verdicts.collect()}
     assert validated == suspect  # certified partitions were NOT rescanned
+    # a conversation whose turns lie in certified partitions is not
+    # reported empty
+    turns = spark.read.parquet(f"{base}/fx/turns")
+    with_turns = {r.conv_id for r in turns.select("conv_id").collect()}
+    empty = {
+        r.conv_id
+        for r in spark.read.parquet(f"{base}/target_report/violations")
+        .where("rule_id = 'empty.conversation'")
+        .collect()
+    }
+    assert not empty & with_turns
+    # ...while the manifest's zero-turn conversations still are
+    zero_turn = {
+        f"c{cfg.n_convs + i}" for i in range(cfg.n_empty_convs)
+    }
+    assert zero_turn and not zero_turn & with_turns
+    assert zero_turn <= empty
 
 
 def test_certify_target_flag_validation():
@@ -180,6 +201,12 @@ def test_certify_target_flag_validation():
         parse_args([
             "--turns", "/t", "--out", "/o", "--certify-bp", "1000",
             "--certify-only", "--certify-target",
+        ])
+    # the turn-count reconcile needs every turn of a conversation
+    with pytest.raises(SystemExit):
+        parse_args([
+            "--turns", "/t", "--out", "/o", "--conversations", "/c",
+            "--certify-bp", "1000", "--certify-target", "--reconcile-manifest",
         ])
 
 

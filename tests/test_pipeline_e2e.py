@@ -244,7 +244,7 @@ def test_materialize_semantic_parity(spark, tables, result):
     checkpointed frames must hold EXACTLY the lazy result's rows."""
     from sgb_data_validator_spark.plans.pipeline import materialize
 
-    m = materialize(result, tables.turns)
+    m = materialize(result)
     for lazy, mat in (
         (result.violations, m.violations),
         (result.verdicts, m.verdicts),

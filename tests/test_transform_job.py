@@ -55,6 +55,16 @@ def test_manifest_counts_per_stage(spark, turns):
         assert got[f"changed_{name}"] == want, name
 
 
+def test_pandas_udf_stage_planned_once(turns):
+    """The entities+NFC pandas UDF runs once per row: the stage columns
+    are projected once below observe, so the metrics and the output text
+    share one ArrowEvalPython node instead of each inlining the stage."""
+    cleaned, _, _ = transformed_with_metrics(turns)
+    plan = cleaned._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert cleaned.columns == turns.columns
+
+
 def test_job_writes_table_and_manifest(spark, turns, tmp_path):
     src = str(tmp_path / "turns")
     turns.write.partitionBy("part").parquet(src)

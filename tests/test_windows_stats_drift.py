@@ -1,5 +1,6 @@
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from sgb_data_validator_spark.operators.drift import (
@@ -275,6 +276,40 @@ def test_drift_fires_on_shifted_partition(spark):
     got = {(r.rule_id, r.part) for r in drift_violations(turns, baseline).collect()}
     assert ("drift.kl.role", "bad") in got
     assert all(p != "good" for _, p in got)
+
+
+@pytest.fixture(scope="module")
+def fixture_tables(spark, tmp_path_factory):
+    from sgb_data_validator_spark.plans.pipeline import TranscriptTables
+    from sgb_data_validator_spark.sources.generator import FixtureConfig, write_fixture_tables
+
+    d = str(tmp_path_factory.mktemp("plan_shape"))
+    write_fixture_tables(spark, FixtureConfig(n_turns=1000), d)
+    return TranscriptTables(
+        *(spark.read.parquet(f"{d}/{n}")
+          for n in ("turns", "conversations", "allowed_tools", "baseline_stats"))
+    )
+
+
+def _turns_scans(df) -> int:
+    """FileScan nodes over the parquet turns table in the unexecuted
+    physical plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum("FileScan" in ln and "/turns]" in ln for ln in plan.splitlines())
+
+
+def test_drift_violations_scans_the_fact_once(fixture_tables):
+    """Every drift statistic reads one frequency table: the KL (role,
+    tool) and chi-square (hour) checks plan a single turns scan."""
+    t = fixture_tables
+    assert _turns_scans(drift_violations(t.turns, t.baseline_stats)) == 1
+
+
+def test_default_violations_plan_turns_scans(fixture_tables):
+    """Plan-shape guard for the default validate() violations frame."""
+    from sgb_data_validator_spark.plans.pipeline import compute_violations
+
+    assert _turns_scans(compute_violations(fixture_tables)) <= 9
 
 
 def test_js_divergence_bounded_and_zero_on_identical(spark):
